@@ -20,8 +20,11 @@ Scale posture (100 TB): centroids are model state — k·dim longs — and
 ride a broadcast; each round is ONE pass over the vectors (broadcast
 nested-loop against k rows, dot/diff folds inside whole-stage codegen)
 plus ONE map-side-combinable mean aggregation over (cluster, dim) keys
-(k·dim groups, constant-size reduce state). Rounds are unrolled by the
-caller (same idiom as q121 PageRank); no driver collect anywhere.
+(k·dim groups, constant-size reduce state). ``kmeans`` is the one round
+loop: it unrolls a fixed number of rounds (same idiom as q121 PageRank)
+with a lazy checkpoint per round, and its ``by`` key trains independent
+models — PQ's m subspaces — as ONE job chain instead of m. No driver
+collect anywhere.
 """
 
 from __future__ import annotations
@@ -48,31 +51,40 @@ def integerize_embeddings(
     )
 
 
-def seed_centroids(vectors: DataFrame, k: int, stride: int = 29) -> DataFrame:
+def seed_centroids(
+    vectors: DataFrame, k: int, stride: int = 29, by: tuple[str, ...] = ()
+) -> DataFrame:
     """Deterministic init: the ``k`` smallest vec_ids among
     ``vec_id % stride == 0`` become clusters 0..k-1 (a fixed, engine-
     replayable rule — the k-means++ randomized init trades determinism
     for convergence speed; with unrolled fixed rounds the trade goes the
-    other way). Returns ``(cluster_id, c array<long>)``.
+    other way). Returns ``(*by, cluster_id, c array<long>)``.
+
+    ``by``: group columns of ``vectors`` (one model per group, e.g. the
+    PQ subspace ``s``). Every group seeds from the SAME k ids — the k
+    smallest qualifying vec_ids of the whole frame, joined back to each
+    group's rows (the q151 oracle's ``cbseeds`` rule).
 
     Seed-shortfall guard (ADVICE r10 #2): if fewer than ``k`` vec_ids
     satisfy the stride filter (small fixtures, sparse id spaces), the
     trainer used to degrade SILENTLY to a smaller k — both engines
     identically, so the oracle still passed. Now a lazy ``raise_error``
-    over a global count window fires at execution time (no extra driver
-    action — the frame is ≤k rows). The one remaining silent shape is
-    ZERO matching seeds, which yields an empty — visibly broken —
-    centroid frame rather than a plausible smaller k."""
+    over a per-group count window fires at execution time (no extra
+    driver action — the frame is ≤k rows per group). ZERO matching seeds
+    yields an empty centroid frame, which ``assign_clusters`` rejects."""
     from pyspark.sql import Window
 
-    seeds = (
-        vectors.where(F.col("vec_id") % stride == 0)
-        .orderBy("vec_id")
-        .limit(k)
-    )
-    n_match = F.count("*").over(Window.partitionBy())
+    seeds = vectors.where(F.col("vec_id") % stride == 0)
+    if by:
+        ids = seeds.select("vec_id").distinct().orderBy("vec_id").limit(k)
+        seeds = vectors.join(F.broadcast(ids), "vec_id")
+    else:
+        seeds = seeds.orderBy("vec_id").limit(k)
+    n_match = F.count("*").over(Window.partitionBy(*by))
+    rank = F.row_number().over(Window.partitionBy(*by).orderBy("vec_id"))
     return seeds.select(
-        (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("cluster_id"),
+        *by,
+        (rank - 1).alias("cluster_id"),
         F.when(
             n_match < k,
             F.raise_error(
@@ -92,7 +104,10 @@ def seed_centroids(vectors: DataFrame, k: int, stride: int = 29) -> DataFrame:
 
 
 def assign_clusters(
-    vectors: DataFrame, centroids: DataFrame, carry_q: bool = False
+    vectors: DataFrame,
+    centroids: DataFrame,
+    carry_q: bool = False,
+    by: tuple[str, ...] = (),
 ) -> DataFrame:
     """Nearest centroid per vector under squared L2 (BIGINT-exact):
     broadcast the k-row centroid frame, fold ``Σ(q_d − c_d)²`` JVM-side
@@ -120,10 +135,17 @@ def assign_clusters(
     order-independent even under ties, so the collect_list's
     nondeterministic array order cannot change the result.
 
+    ``by``: the group columns of ``seed_centroids`` — centroids pack one
+    row per group and each vector joins its own group's row (a cross
+    join when ``by`` is empty). Output is ``(*by, vec_id, cluster_id,
+    dist[, q])``.
+
     Ragged-vector guard (ADVICE r10 #2): ``zip_with`` silently truncates
     to the SHORTER array, so a ragged vector (63-dim plant in a 64-dim
     corpus) used to produce a plausible-but-wrong distance; now it
-    raises at execution time via a lazy ``raise_error`` branch."""
+    raises at execution time via a lazy ``raise_error`` branch. An empty
+    centroid frame, or a group with no centroids, raises the same way
+    instead of emitting NULL ``cluster_id``/``dist`` rows."""
 
     def _dist(cc):
         return F.when(
@@ -144,8 +166,20 @@ def assign_clusters(
             )
         )
 
-    packed = centroids.agg(
+    packed = centroids.groupBy(*by).agg(
         F.collect_list(F.struct("cluster_id", "c")).alias("_cents")
+    )
+    if by:
+        joined = vectors.join(F.broadcast(packed), list(by), "left")
+    else:
+        joined = vectors.crossJoin(F.broadcast(packed))
+    # array_min over an empty (or, after the left join, NULL) array is
+    # NULL; every non-empty array yields a non-NULL struct.
+    no_centroids = F.raise_error(
+        F.concat(
+            F.lit("assign_clusters: no centroids"),
+            *([F.lit(" for group "), F.to_json(F.struct(*by))] if by else []),
+        )
     )
     best = F.array_min(
         F.transform(
@@ -158,20 +192,23 @@ def assign_clusters(
     # Two-step select: ``best`` is consumed twice (cluster_id, dist) —
     # behind the alias the argmin runs once per row (CollapseProject
     # keeps a non-cheap expression referenced twice un-inlined).
-    return (
-        vectors.crossJoin(F.broadcast(packed))
-        .select("vec_id", *(["q"] if carry_q else []), best.alias("_m"))
-        .select(
-            "vec_id",
-            F.col("_m.cluster_id").alias("cluster_id"),
-            F.col("_m.dist").alias("dist"),
-            *(["q"] if carry_q else []),
-        )
+    carried = ["q"] if carry_q else []
+    return joined.select(*by, "vec_id", *carried, best.alias("_m")).select(
+        *by,
+        "vec_id",
+        F.when(F.col("_m").isNull(), no_centroids)
+        .otherwise(F.col("_m.cluster_id"))
+        .alias("cluster_id"),
+        F.col("_m.dist").alias("dist"),
+        *carried,
     )
 
 
 def update_centroids(
-    vectors: DataFrame, assignment: DataFrame, centroids: DataFrame
+    vectors: DataFrame,
+    assignment: DataFrame,
+    centroids: DataFrame,
+    by: tuple[str, ...] = (),
 ) -> DataFrame:
     """Integer-mean centroid update: posexplode members to
     ``(cluster, dim, val)``, per-dim ``sum(val) div count(*)`` (truncates
@@ -182,26 +219,59 @@ def update_centroids(
 
     An assignment built with ``assign_clusters(carry_q=True)`` already
     carries the vector — the re-join (a full vector shuffle per round)
-    is skipped in that case (r16); same members, same means."""
+    is skipped in that case (r16); same members, same means. With ``by``
+    every key above gains the group columns: means are per
+    ``(*by, cluster_id, d)``."""
+    key = [*by, "cluster_id"]
     if "q" in assignment.columns:
-        members = assignment.select("vec_id", "cluster_id", "q")
+        members = assignment.select(*key, "q")
     else:
-        members = assignment.select("vec_id", "cluster_id").join(
-            vectors, "vec_id"
+        members = assignment.select(*key, "vec_id").join(
+            vectors, [*by, "vec_id"]
         )
     means = (
-        members.select("cluster_id", F.posexplode("q").alias("d", "val"))
-        .groupBy("cluster_id", "d")
+        members.select(*key, F.posexplode("q").alias("d", "val"))
+        .groupBy(*key, "d")
         .agg(F.expr("sum(val) div count(*)").alias("m"))
     )
-    rebuilt = means.groupBy("cluster_id").agg(
+    rebuilt = means.groupBy(*key).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("d", "m"))), lambda s: s["m"]
         ).alias("c_new")
     )
-    return centroids.join(rebuilt, "cluster_id", "left").select(
-        "cluster_id", F.coalesce("c_new", "c").alias("c")
+    return centroids.join(rebuilt, key, "left").select(
+        *key, F.coalesce("c_new", "c").alias("c")
     )
+
+
+def kmeans(
+    vectors: DataFrame,
+    k: int,
+    rounds: int,
+    stride: int = 29,
+    by: tuple[str, ...] = (),
+) -> DataFrame:
+    """The package's one k-means round loop: ``seed_centroids``, then
+    ``rounds`` × (``assign_clusters(carry_q=True)`` → ``update_centroids``)
+    over integerized ``(*by, vec_id, q)`` vectors. Returns the final
+    ``(*by, cluster_id, c)`` centroids — one independent model per
+    ``by`` group, all groups trained in the same jobs (PQ's m subspaces
+    are ONE chain keyed on ``s``, the shape of the q151 oracle's
+    ``_subspace_kmeans_cte_chain``). With no rounds the seeds come back.
+
+    Lazy checkpoint per round (r16): each round's centroid frame is
+    referenced TWICE by the next (the assignment's broadcast build and
+    the update's left join), so un-truncated lineage replays round t-1
+    twice inside round t — a 2^rounds pass blowup. Callers checkpoint
+    ``vectors`` themselves when it is expensive to recompute: it is
+    scanned once per round."""
+    cents = seed_centroids(vectors, k, stride=stride, by=by)
+    for _ in range(rounds):
+        assignment = assign_clusters(vectors, cents, carry_q=True, by=by)
+        cents = update_centroids(
+            vectors, assignment, cents, by=by
+        ).localCheckpoint(eager=False)
+    return cents
 
 
 def kmeans_cluster_stats(
@@ -218,21 +288,10 @@ def kmeans_cluster_stats(
     Σ min-dist — the convergence scalar a pipeline monitors; min_vec_id
     is a cheap membership witness so the oracle hash moves if ANY vector
     switches clusters, not only when counts change."""
-    # Lazy checkpoints (r16): the vectors frame is re-scanned once per
-    # round, and each round's centroid frame is referenced TWICE by the
-    # next (the assignment's broadcast build and the update's left
-    # join), so un-truncated lineage replays round t-1 twice inside
-    # round t — a 2^rounds corpus-pass blowup. The per-round boundary
-    # makes it one pass per round (the _coarse_quantizer discipline).
     vectors = integerize_embeddings(emb, scale=scale).localCheckpoint(
         eager=False
     )
-    cents = seed_centroids(vectors, k, stride=stride)
-    for _ in range(rounds):
-        assignment = assign_clusters(vectors, cents, carry_q=True)
-        cents = update_centroids(vectors, assignment, cents).localCheckpoint(
-            eager=False
-        )
+    cents = kmeans(vectors, k, rounds, stride)
     final = assign_clusters(vectors, cents)
     stats = final.groupBy("cluster_id").agg(
         F.count("*").alias("n"),

@@ -1082,7 +1082,7 @@ def semantic_dedup(
     no shingles.
 
     Deterministic and engine-exact end to end: the cell assignment is
-    the q149 unrolled integer k-means (seeded init, BIGINT means); the
+    q149's ``clustering.kmeans`` (seeded init, BIGINT means); the
     similarity test quantizes embeddings at ``cos_scale`` and compares
     ``dot² · 10⁴ ≥ t² · na · nb`` with ``dot > 0`` — the squared-cosine
     form of ``cos ≥ t/100`` in pure int64 (no sqrt, no float; a lazy
@@ -1111,25 +1111,14 @@ def semantic_dedup(
     from albedo_spark.operators.clustering import (
         assign_clusters,
         integerize_embeddings,
-        seed_centroids,
-        update_centroids,
+        kmeans,
     )
 
     emb = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
     vectors = integerize_embeddings(emb, scale=kmeans_scale).localCheckpoint(
         eager=False
     )
-    cents = seed_centroids(vectors, k, stride=stride)
-    for _ in range(rounds):
-        assignment = assign_clusters(vectors, cents, carry_q=True)
-        # Lazy per-round checkpoint (r16): each round's centroid frame is
-        # referenced twice by the next round (assignment broadcast build
-        # + update left join), so without a boundary round t replays
-        # round t-1 twice — a 2^rounds corpus-pass blowup (the
-        # _coarse_quantizer / kmeans_cluster_stats discipline).
-        cents = update_centroids(vectors, assignment, cents).localCheckpoint(
-            eager=False
-        )
+    cents = kmeans(vectors, k, rounds, stride)
     # Consumed twice (the scoring side AND the final attribution join);
     # without a boundary the whole unrolled k-means chain executes per
     # consumer (broadcast builds never share work).

@@ -17,9 +17,9 @@ integerization, codebooks are integer literals, so every encode decision
 BIGINT — the whole index build AND query path is hash-gateable (q150),
 unlike any float PQ implementation. Codebooks can come from anywhere
 that yields integer centroids; ``formula_codebooks`` gives a fixed
-auditable default, and training them per-subspace with
-``operators/clustering.py`` k-means is the production path (same
-determinism contract end to end).
+auditable default, and training them with ``clustering.kmeans`` keyed
+on the subspace is the production path (same determinism contract end
+to end).
 
 Scale posture (100 TB): codebooks are m·ncodes·subdim longs — model
 state on a broadcast. Encoding is one pass over the vectors (broadcast
@@ -35,7 +35,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from albedo_spark.operators.clustering import integerize_embeddings
+from albedo_spark.operators.clustering import (
+    assign_clusters,
+    integerize_embeddings,
+    kmeans,
+)
 from albedo_spark.operators.topk import top_k_per_group
 
 
@@ -46,8 +50,8 @@ def formula_codebooks(
     formula spanning [-spread, spread] (the sf fixture's integerized
     components sit in ~[-525, 458]) — deterministic, auditable, shared
     verbatim with the SQL oracle (the q148 literal-fixture technique).
-    Production trains per-subspace codebooks with the clustering
-    module's k-means instead; the encode/ADC path is identical."""
+    Production trains the codebooks with ``clustering.kmeans`` instead
+    (``train_codebooks``); the encode/ADC path is identical."""
     mod = 2 * spread + 1
     return [
         (
@@ -230,59 +234,45 @@ def pq_adc_topk(
     ).select("query_id", "neighbor_id", "adist", "rank")
 
 
-def _train_subspace_codebooks(
-    vectors: DataFrame,
-    m: int,
-    ncodes: int,
-    subdim: int,
-    rounds: int,
-    stride: int,
+def _subspace_codebooks(
+    sub: DataFrame, ncodes: int, rounds: int, stride: int
 ) -> list[tuple[int, int, list[int]]]:
-    """Per-subspace k-means over an integerized ``(vec_id, q)`` frame —
-    the shared trainer core of ``train_codebooks`` (raw vectors) and
-    ``train_residual_codebooks`` (IVF residuals)."""
-    from albedo_spark.operators.clustering import (
-        assign_clusters,
-        seed_centroids,
-        update_centroids,
+    """Driver-side ``(s, code, centroid)`` codebooks from a ``(vec_id,
+    s, sub)`` subvector frame: ``clustering.kmeans`` keyed on ``s``, so
+    all m subspaces train in ONE job chain (the shape of the q151
+    oracle's ``_subspace_kmeans_cte_chain``). The frame is scanned once
+    per round, hence the lazy checkpoint."""
+    vectors = sub.select(
+        "vec_id", "s", F.col("sub").alias("q")
+    ).localCheckpoint(eager=False)
+    cb = kmeans(vectors, ncodes, rounds, stride, by=("s",))
+    rows = sorted(cb.collect())
+    return [(r.s, r.cluster_id, [int(x) for x in r.c]) for r in rows]
+
+
+def _residual_subvectors(
+    vectors: DataFrame, cents: DataFrame, m: int, subdim: int
+) -> DataFrame:
+    """``(vec_id, cluster_id, s, sub)`` — each integerized vector's
+    residual against its nearest coarse centroid, sliced into m
+    subspaces: the input of residual codebook training AND of the IVF-PQ
+    encoder. Dimension-guarded."""
+    # carry_q folds the assignment ⋈ vectors re-join into the argmin's
+    # own pass (r16): the residual needs only the broadcast centroid join.
+    assign = assign_clusters(vectors, cents, carry_q=True)
+    resid = assign.join(F.broadcast(cents), "cluster_id").select(
+        "vec_id",
+        "cluster_id",
+        F.zip_with("q", "c", lambda a, b: a - b).alias("q"),
     )
-
-    # Lineage discipline: the subspace frame is re-scanned ncodes·rounds
-    # times per subspace, and per-round centroids are re-derived by every
-    # later round — without truncation the plan re-executes the ENTIRE
-    # upstream (for residual training: the whole coarse k-means) once per
-    # re-reference, which is quadratic in rounds and was measured as a
-    # stall at kc=16/ncodes=64. localCheckpoint caps both. EAGER here:
-    # the subspace fits below run from a thread pool, and one shared
-    # materialization beats m threads racing the first lazy fill.
-    sub = _subvectors(vectors, m, subdim).localCheckpoint()
-
-    def _train_one(s: int) -> list[tuple[int, int, list[int]]]:
-        vs = sub.where(F.col("s") == s).select(
-            "vec_id", F.col("sub").alias("q")
-        )
-        cents = seed_centroids(vs, ncodes, stride=stride)
-        for _ in range(rounds):
-            assignment = assign_clusters(vs, cents, carry_q=True)
-            cents = update_centroids(vs, assignment, cents).localCheckpoint(
-                eager=False
-            )
-        return [
-            (s, int(r.cluster_id), [int(x) for x in r.c])
-            for r in sorted(cents.collect(), key=lambda r: r.cluster_id)
-        ]
-
-    # The m subspace fits are INDEPENDENT job chains over the shared
-    # materialized frame — submit them from a small thread pool so one
-    # fit's straggler tail back-fills with the next fit's jobs (guide
-    # §2.6, the r15 ranker-fit pattern). pool.map preserves subspace
-    # order, so the returned codebook list is byte-identical to the
-    # sequential loop's.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, m)) as pool:
-        results = list(pool.map(_train_one, range(m)))
-    return [t for r in results for t in r]
+    _rq = _dim_checked(m, subdim, "ivf_pq residual")
+    return resid.select(
+        "vec_id",
+        "cluster_id",
+        F.posexplode(
+            F.array(*[F.slice(_rq, s * subdim + 1, subdim) for s in range(m)])
+        ).alias("s", "sub"),
+    )
 
 
 def train_codebooks(
@@ -294,7 +284,7 @@ def train_codebooks(
     rounds: int = 2,
     stride: int = 29,
 ) -> list[tuple[int, int, list[int]]]:
-    """Per-subspace k-means codebooks via operators/clustering.py — the
+    """Per-subspace k-means codebooks via ``clustering.kmeans`` — the
     production alternative to ``formula_codebooks`` with the SAME
     determinism contract (integer centroids, fixed seeded init, unrolled
     rounds), so a trained index is as replayable as the formula one.
@@ -302,28 +292,9 @@ def train_codebooks(
     longs of MODEL STATE (the ALS-factor analog; at any corpus scale
     this is a few KB destined for a broadcast, not data)."""
     vectors = integerize_embeddings(emb, scale=scale)
-    return _train_subspace_codebooks(vectors, m, ncodes, subdim, rounds, stride)
-
-
-def _coarse_quantizer(vectors: DataFrame, kc: int, rounds: int, stride: int):
-    """The IVF coarse k-means (cluster_id, c) — factored out so
-    ``train_residual_codebooks`` and ``ivf_pq_topk`` derive the
-    IDENTICAL quantizer from identical (kc, rounds, stride): the
-    integer-determinism contract is what makes training and serving
-    agree without shipping the centroids between them."""
-    from albedo_spark.operators.clustering import (
-        assign_clusters,
-        seed_centroids,
-        update_centroids,
+    return _subspace_codebooks(
+        _subvectors(vectors, m, subdim), ncodes, rounds, stride
     )
-
-    cents = seed_centroids(vectors, kc, stride=stride)
-    for _ in range(rounds):
-        assignment = assign_clusters(vectors, cents, carry_q=True)
-        cents = update_centroids(vectors, assignment, cents).localCheckpoint(
-            eager=False
-        )
-    return cents
 
 
 def train_residual_codebooks(
@@ -344,29 +315,15 @@ def train_residual_codebooks(
     raw-vector training; tools/scale_pq.py measures the recall gap).
     MUST be paired with an ``ivf_pq_topk`` call using the same
     (kc, coarse_rounds→rounds, stride, scale): the integer coarse
-    quantizer is bit-replayable, so training and serving rebuild the
-    identical cells without shipping centroids."""
-    from albedo_spark.operators.clustering import assign_clusters
-
+    quantizer (``clustering.kmeans``) is bit-replayable, so training and
+    serving rebuild the identical cells without shipping centroids."""
     vectors = integerize_embeddings(emb, scale=scale).localCheckpoint(
         eager=False
     )
-    cents = _coarse_quantizer(vectors, kc, coarse_rounds, stride).localCheckpoint(
-        eager=False
+    cents = kmeans(vectors, kc, coarse_rounds, stride)
+    return _subspace_codebooks(
+        _residual_subvectors(vectors, cents, m, subdim), ncodes, rounds, stride
     )
-    # carry_q: the assignment row already holds the vector, so the
-    # residual projection needs only the broadcast centroid join — the
-    # assignment ⋈ vectors re-shuffle is gone (r16, guide §2.4).
-    assign = assign_clusters(vectors, cents, carry_q=True)
-    resid = (
-        assign.join(F.broadcast(cents), "cluster_id")
-        .select(
-            "vec_id",
-            F.zip_with("q", "c", lambda a, b: a - b).alias("q"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    return _train_subspace_codebooks(resid, m, ncodes, subdim, rounds, stride)
 
 
 def encode_residual_codes(
@@ -383,27 +340,7 @@ def encode_residual_codes(
     code)`` — the m-rows-per-vector code table, the at-rest shape of a
     compressed vector store (m small ints instead of dim floats).
     ``cents`` and ``cb`` are broadcast model state; one vector pass."""
-    from albedo_spark.operators.clustering import assign_clusters
-
-    # carry_q folds the assignment ⋈ vectors re-join into the argmin's
-    # own exchange (r16): the encode pass touches the corpus once.
-    assign = assign_clusters(vectors, cents, carry_q=True)
-    resid = (
-        assign.join(F.broadcast(cents), "cluster_id")
-        .select(
-            "vec_id",
-            "cluster_id",
-            F.zip_with("q", "c", lambda a, b: a - b).alias("q"),
-        )
-    )
-    _rq = _dim_checked(m, subdim, "ivf_pq residual")
-    rsub = resid.select(
-        "vec_id",
-        "cluster_id",
-        F.posexplode(
-            F.array(*[F.slice(_rq, s * subdim + 1, subdim) for s in range(m)])
-        ).alias("s", "sub"),
-    )
+    rsub = _residual_subvectors(vectors, cents, m, subdim)
     # In-row argmin over the packed codebook (r16): the old path fanned
     # every vector out to m·ncodes distance rows and shuffled them back
     # through a groupBy argmin; this is a 1:1 broadcast join + pure
@@ -438,8 +375,8 @@ def ivf_pq_topk(
     coding concentrates what the codebook must represent around the
     cell centroid — the standard recall-per-bit win.
 
-    All stages inherit the package's integer discipline (coarse k-means
-    from operators/clustering.py, integer residuals, integer codebooks)
+    All stages inherit the package's integer discipline (coarse
+    ``clustering.kmeans``, integer residuals, integer codebooks)
     so the ENTIRE pipeline — train, assign, encode, probe, ADC — is
     hash-exact (q151). Plan: centroids and codebooks are broadcast model
     state; the corpus makes ONE assignment pass and ONE encode pass
@@ -465,8 +402,7 @@ def ivf_pq_topk(
             eager=False
         )
     )
-    cents = _coarse_quantizer(vectors, kc, rounds, stride)
-    cents = cents.localCheckpoint(eager=False)  # consumers: assign, resid, probe
+    cents = kmeans(vectors, kc, rounds, stride)
 
     codes = encode_residual_codes(vectors, cents, cb, m, subdim)
     qv = vectors.where(query_pred(F.col("vec_id"))).select(

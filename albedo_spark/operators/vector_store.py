@@ -447,7 +447,8 @@ def build_pq_store(
     keeps the family's never-shuffle contract.
 
     ``codebooks``: ``"train"`` trains residual codebooks on the corpus
-    (``pq.train_residual_codebooks`` — the production default the
+    (``pq.train_residual_codebooks`` with ``coarse_rounds=rounds``,
+    reusing the coarse centroids trained here — the production default the
     repo's own probe measures at ~2× the formula recall at the same bit
     budget); ``None`` keeps the parameter-derived ``formula_codebooks``
     (the auditable/oracle-replayable default); or pass a list. WHICHEVER
@@ -466,30 +467,28 @@ def build_pq_store(
     frozen model — the slice narrows candidates, never the model),
     which is exactly what keeps the partition path result-identical to
     the broadcast allow path (pinned in tests)."""
-    from albedo_spark.io import write_bucketed
-    from albedo_spark.operators.clustering import integerize_embeddings
+    from albedo_spark.io import drop_orphan_table_location, write_bucketed
+    from albedo_spark.operators.clustering import integerize_embeddings, kmeans
     from albedo_spark.operators.pq import (
-        _coarse_quantizer,
+        _residual_subvectors,
+        _subspace_codebooks,
         encode_residual_codes,
         formula_codebooks,
-        train_residual_codebooks,
     )
 
     spark = corpus.sparkSession
+    vectors = integerize_embeddings(corpus, scale=scale).localCheckpoint(
+        eager=False
+    )
+    cents = kmeans(vectors, kc, rounds, stride)
     if codebooks == "train":
-        codebooks = train_residual_codebooks(
-            corpus, kc=kc, m=m, ncodes=ncodes, subdim=subdim, scale=scale,
-            coarse_rounds=rounds, rounds=rounds, stride=stride,
+        codebooks = _subspace_codebooks(
+            _residual_subvectors(vectors, cents, m, subdim),
+            ncodes, rounds, stride,
         )
     elif codebooks is None:
         codebooks = formula_codebooks(m=m, ncodes=ncodes, subdim=subdim)
     cb = spark.createDataFrame(codebooks, "s int, code int, c array<long>")
-    vectors = integerize_embeddings(corpus, scale=scale).localCheckpoint(
-        eager=False
-    )
-    from albedo_spark.io import drop_orphan_table_location
-
-    cents = _coarse_quantizer(vectors, kc, rounds, stride)
     for suffix, frame in (("_cents", cents), ("_cb", cb)):
         spark.sql(f"DROP TABLE IF EXISTS `{table}{suffix}`")
         drop_orphan_table_location(spark, table + suffix)

@@ -8848,17 +8848,17 @@ def _subspace_kmeans_cte_chain(
     rounds: int = 2,
     stride: int = 29,
 ) -> tuple[str, str]:
-    """CTE chain replaying pq._train_subspace_codebooks in DuckDB: ALL m
-    subspaces train in ONE chain with ``s`` as an extra key (the seeded
-    init picks the same vec_ids in every subspace, so the per-s trainers
-    share rounds). ``rsub`` is the name of a ``(vec_id, s, sd, val)``
-    TRAINING-residual CTE. Emits seeds → cb0 → per-round (assign by
-    (dist, code) argmin / per-(s, code, sd) ``sum // count`` mean /
-    carry-empty-codes) — the exact integer semantics of
-    clustering.seed_centroids/assign_clusters/update_centroids applied
-    per subspace. Returns ``(chain_sql_fragment, final_cb_cte)`` where
-    the final CTE has columns (s, code, sd, cval). MATERIALIZED on the
-    reused CTEs per the q155 DuckDB-inlining lesson."""
+    """CTE chain replaying ``clustering.kmeans(..., by=("s",))`` (the PQ
+    codebook trainer) in DuckDB: ALL m subspaces train in ONE chain with
+    ``s`` as an extra key (the seeded init picks the same vec_ids in
+    every subspace), the same shape as the Spark side. ``rsub`` is the
+    name of a ``(vec_id, s, sd, val)`` TRAINING-residual CTE. Emits
+    seeds → cb0 → per-round (assign by (dist, code) argmin / per-(s,
+    code, sd) ``sum // count`` mean / carry-empty-codes) — the exact
+    integer semantics of ``clustering.kmeans`` keyed on ``s``. Returns
+    ``(chain_sql_fragment, final_cb_cte)`` where the final CTE has
+    columns (s, code, sd, cval). MATERIALIZED on the reused CTEs per the
+    q155 DuckDB-inlining lesson."""
     parts = [
         f""",
     cbseeds AS (

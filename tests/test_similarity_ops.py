@@ -783,6 +783,74 @@ def test_ivf_pq_probe_contract_and_determinism(spark):
     assert out16 == base
 
 
+def test_assign_clusters_without_centroids_raises(spark):
+    """ADVICE: an empty centroid frame (or a group with no centroids)
+    must raise a named error, not emit NULL cluster_id/dist rows."""
+    from albedo_spark.operators.clustering import (
+        assign_clusters,
+        integerize_embeddings,
+    )
+
+    v = integerize_embeddings(
+        spark.createDataFrame(
+            [(0, [1.0, 2.0]), (1, [3.0, 4.0])],
+            "vec_id long, embedding array<double>",
+        )
+    )
+    none = spark.createDataFrame([], "cluster_id int, c array<long>")
+    with pytest.raises(Exception, match="assign_clusters: no centroids"):
+        assign_clusters(v, none).collect()
+
+    grouped = v.select("vec_id", (F.col("vec_id") % 2).alias("s"), "q")
+    only_s0 = spark.createDataFrame(
+        [(0, 0, [1000, 2000])], "s long, cluster_id int, c array<long>"
+    )
+    with pytest.raises(
+        Exception, match='assign_clusters: no centroids for group {"s":1}'
+    ):
+        assign_clusters(grouped, only_s0, by=("s",)).collect()
+
+
+def test_pq_codebooks_train_as_one_chain_in_callers_job_group(spark):
+    """All m subspace codebooks train in one ``kmeans(by=("s",))`` job
+    chain on the caller's thread: every job carries the caller's job
+    group (per-layer tracing sees them all) and the job count stays
+    pinned. The grouped trainer equals m separate ungrouped runs."""
+    from albedo_spark.operators.clustering import integerize_embeddings, kmeans
+    from albedo_spark.operators.pq import _subvectors, train_residual_codebooks
+
+    emb = _emb(spark).localCheckpoint()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("test-pq-train", "train_residual_codebooks")
+    try:
+        cb = train_residual_codebooks(emb, kc=8, m=4, ncodes=8, subdim=16)
+    finally:
+        sc._jsc.clearJobGroup()
+    grouped = tracker.getJobIdsForGroup("test-pq-train")
+    ungrouped = set(tracker.getJobIdsForGroup(None)) - before
+    assert len(cb) == 4 * 8
+    assert not ungrouped, f"{len(ungrouped)} jobs ran outside the group"
+    assert 0 < len(grouped) <= 27, len(grouped)
+
+    sub = _subvectors(integerize_embeddings(emb), 4, 16).select(
+        "vec_id", "s", F.col("sub").alias("q")
+    )
+    together = {
+        (r.s, r.cluster_id): list(r.c)
+        for r in kmeans(sub, 8, 2, 29, by=("s",)).collect()
+    }
+    apart = {
+        (s, r.cluster_id): list(r.c)
+        for s in range(4)
+        for r in kmeans(
+            sub.where(F.col("s") == s).select("vec_id", "q"), 8, 2, 29
+        ).collect()
+    }
+    assert together == apart and len(apart) == 4 * 8
+
+
 def test_dimension_guards_raise_loudly(spark):
     """ADVICE r10 #2: a 63-dim plant in a 64-dim corpus (pq) / a ragged
     vector or a seed shortfall (clustering) must raise at execution time
